@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * and owns every key with `hash mod 2^d == b`; splitting an oversized
   * bucket moves it to depth d+1 and rewrites ONLY that bucket's rows into
   * children `b` and `b + 2^d` — IO ∝ one bucket, never ∝ state. The
-  * manifest (`_layout/v=N/layout.txt`, `_SUCCESS`-fenced versions) records,
-  * atomically per batch:
+  * manifest (`_layout/v=N`, one file per version, committed through
+  * [[MetaFile.commitNext]]) records, atomically per batch:
   *
   *   - `bucketCols` — which columns the layout hashes (so a point read on a
   *     bucketCols-narrowed state, e.g. the value-bucketed secondary index,
@@ -20,15 +20,16 @@ import org.apache.spark.sql.functions._
   *   - per bucket: its depth AND the committed version pointer its readers
   *     must open.
   *
-  * The version POINTERS make the manifest the single commit point: a batch
-  * writes its touched buckets' next version dirs, then flips one manifest
-  * version — a crash anywhere before the flip leaves every reader on the
-  * previous consistent set (no torn multi-bucket reads, which the
-  * per-bucket `_SUCCESS` fences alone allowed), and mid-split states are
-  * simply invisible until their manifest commits. This is the same
-  * manifest-pointer protocol production table formats use for exactly this
-  * reason. States written before manifests existed read through the legacy
-  * latest-`_SUCCESS` path and adopt a manifest on their next merge.
+  * The version POINTERS make the manifest the ONLY commit point: a batch
+  * writes its touched buckets' next `bucket=B/v=N` dirs, then flips one
+  * manifest version. A bucket dir carries no marker of its own — a crash
+  * anywhere before the flip leaves every reader on the previous consistent
+  * set (no torn multi-bucket reads), and mid-split or half-promoted dirs
+  * are simply invisible until a manifest names them; the replay overwrites
+  * them. This is the same manifest-pointer protocol production table
+  * formats use for exactly this reason. A state exists iff it has a
+  * manifest: [[ChangelogStream.upsertBatch]] commits the initial layout
+  * before it writes any bucket.
   *
   * A SAVEPOINT is a retained copy of one manifest version
   * (`_savepoints/<name>.txt`): it pins a consistent (bucket → version) set,
@@ -89,41 +90,29 @@ object Buckets {
       l.entries.toSeq.sortBy(_._1).map { case (b, (d, v)) => s"$b\t$d\t$v" })
       .mkString("\n")
 
-  private def readManifestFile(spark: SparkSession, path: String): Layout = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    try parse(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally in.close()
-  }
+  private def layoutDir(stateDir: String) =
+    new org.apache.hadoop.fs.Path(s"$stateDir/_layout")
 
-  /** The state's current layout, if it has adopted a manifest. */
+  /** The state's current layout; None = no state at `stateDir`. */
   def read(spark: SparkSession, stateDir: String): Option[Layout] =
-    ChangelogStream.committedVersions(spark, s"$stateDir/_layout").lastOption
-      .map(v => readManifestFile(spark, s"$stateDir/_layout/v=$v/layout.txt"))
+    MetaFile.latest(fs(spark, stateDir), layoutDir(stateDir)).map(parse)
+
+  /** The live manifest's version number (-1 = no state): every merge,
+    * compaction, shrink and restore advances it. */
+  def manifestVersion(spark: SparkSession, stateDir: String): Long =
+    MetaFile.versions(fs(spark, stateDir), layoutDir(stateDir)).lastOption
+      .getOrElse(-1L)
 
   /** Commit the next manifest version (the batch's atomic flip point).
     * Retention keeps the new version + one predecessor. */
-  def commit(spark: SparkSession, stateDir: String, layout: Layout): Unit = {
-    val dir = s"$stateDir/_layout"
-    val f = fs(spark, dir)
-    val next = ChangelogStream.committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (f.exists(vDir)) f.delete(vDir, true) // uncommitted crash leftover
-    f.mkdirs(vDir)
-    val out = f.create(new org.apache.hadoop.fs.Path(vDir, "layout.txt"))
-    out.write(render(layout).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    f.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    ChangelogStream.committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
-  }
+  def commit(spark: SparkSession, stateDir: String, layout: Layout): Unit =
+    MetaFile.commitNext(fs(spark, stateDir), layoutDir(stateDir), render(layout))
 
   /** The bucket a row hashes to under `layout` — deepest buckets checked
     * first (the extendible-hashing partition invariant makes the first
     * depth whose bucket set contains the candidate the owner). A uniform
-    * layout compiles to the single `pmod(hash, n)` of the pre-manifest
-    * code; every term stays inside whole-stage codegen. */
+    * layout compiles to a single `pmod(hash, n)`; every term stays inside
+    * whole-stage codegen. */
   def bucketExpr(layout: Layout, cols: Seq[String]): Column = {
     val h = hash(cols.map(col): _*)
     val byDepth = layout.entries.toSeq.groupBy(_._2._1).toSeq.sortBy(-_._1)
@@ -153,7 +142,7 @@ object Buckets {
   // ── savepoints ────────────────────────────────────────────────────────
 
   private def savepointPath(stateDir: String, name: String) =
-    s"$stateDir/_savepoints/$name.txt"
+    new org.apache.hadoop.fs.Path(s"$stateDir/_savepoints/$name.txt")
 
   /** Pin the CURRENT manifest under a name: a consistent (bucket → version)
     * set that retention will preserve and [[readAt]] can open later. The
@@ -164,35 +153,22 @@ object Buckets {
   def savepoint(spark: SparkSession, stateDir: String, name: String): Unit = {
     val layout = read(spark, stateDir).getOrElse(
       throw new IllegalStateException(s"no manifest to savepoint at $stateDir"))
-    val fences = ChangelogStream.truncateFences(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val f = fs(spark, stateDir)
-    f.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${name}.tmp")
-    val out = f.create(tmp, true)
-    val fenceLines = fences.toSeq.sortBy(_._1)
-      .map { case (t, s) => s"\nfence\t$t\t$s" }.mkString
-    out.write((render(layout) + fenceLines)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (f.exists(p)) f.delete(p, false) // idempotent re-pin (batch replay)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"savepoint commit failed: $name")
+    val fenceLines = ChangelogStream.truncateFences(spark, stateDir).toSeq
+      .sortBy(_._1).map { case (t, s) => s"\nfence\t$t\t$s" }.mkString
+    // an existing pin is replaced: idempotent re-pin (batch replay)
+    MetaFile.write(fs(spark, stateDir), savepointPath(stateDir, name),
+      render(layout) + fenceLines)
   }
 
   /** A savepoint's pinned (layout, truncate fences), parsed from ONE read
     * of the pin file (ADVICE r14: readAt + readFencesAt re-opened the same
     * small file per as-of read, doubling round trips on a per-query path).
-    * Fences are empty for pins taken before any fence — and for pre-r14
-    * pins, which read as fence-free; correct whenever no truncate preceded
-    * the pin, the only case they served. */
+    * Fences are empty for pins taken before any fence. */
   def readSavepoint(spark: SparkSession, stateDir: String,
                     name: String): (Layout, Map[String, Long]) = {
-    val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+    val txt = MetaFile.read(fs(spark, stateDir), savepointPath(stateDir, name))
+      .getOrElse(throw new IllegalStateException(
+        s"no savepoint '$name' at $stateDir"))
     val fences = txt.split('\n').filter(_.startsWith("fence\t")).map { l =>
       val Array(_, t, s) = l.split('\t')
       t -> s.toLong
@@ -279,11 +255,10 @@ object Buckets {
     val pins = pinnedVersions(spark, stateDir)
     val f = fs(spark, stateDir)
     pinned.entries.toSeq.sortBy(_._1).foreach { case (b, (_, v)) =>
-      val bDir = s"$stateDir/bucket=$b"
-      ChangelogStream.committedVersions(spark, bDir)
+      val bDir = new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b")
+      MetaFile.versions(f, bDir)
         .filter(x => x > v && !pins.getOrElse(b, Set.empty).contains(x))
-        .foreach(x =>
-          f.delete(new org.apache.hadoop.fs.Path(s"$bDir/v=$x"), true))
+        .foreach(x => f.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$x"), true))
     }
   }
 
@@ -296,11 +271,8 @@ object Buckets {
     * so a crash between the two just defers the reclaim. Idempotent:
     * releasing a missing savepoint is a no-op (a replayed batch may
     * release twice). */
-  def releaseSavepoint(spark: SparkSession, stateDir: String, name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val f = fs(spark, stateDir)
-    if (f.exists(p)) f.delete(p, false)
-  }
+  def releaseSavepoint(spark: SparkSession, stateDir: String, name: String): Unit =
+    fs(spark, stateDir).delete(savepointPath(stateDir, name), false)
 
   /** The names of every savepoint of a state (empty when none). */
   def savepointNames(spark: SparkSession, stateDir: String): Seq[String] = {
@@ -313,13 +285,9 @@ object Buckets {
 
   /** Every (bucket, version) any savepoint still pins — retention must not
     * delete these. One small-file read per savepoint per batch. */
-  def pinnedVersions(spark: SparkSession, stateDir: String): Map[Int, Set[Long]] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/_savepoints")
-    val f = fs(spark, stateDir)
-    if (!f.exists(dir)) return Map.empty
-    f.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
-      .map(s => readManifestFile(spark, s.getPath.toString))
-      .flatMap(_.entries.toSeq.collect { case (b, (_, v)) if v >= 0 => b -> v })
+  def pinnedVersions(spark: SparkSession, stateDir: String): Map[Int, Set[Long]] =
+    savepointNames(spark, stateDir)
+      .flatMap(n => readAt(spark, stateDir, n).entries.toSeq
+        .collect { case (b, (_, v)) if v >= 0 => b -> v })
       .groupBy(_._1).map { case (b, vs) => b -> vs.map(_._2).toSet }
-  }
 }

@@ -122,7 +122,7 @@ object Index {
                     keyCols: Seq[String] = Seq("id")): DataFrame = {
     val bucket = Buckets.read(spark, idxDir)
       .map(l => Buckets.bucketOfValues(l, Seq(value)))
-      .getOrElse(ChangelogStream.bucketOfValues(Seq(value)))
+      .getOrElse(throw new IllegalStateException(s"no state at $idxDir"))
     ChangelogStream.readState(spark, idxDir, "v" +: keyCols,
       onlyBucket = Some(bucket))
       .filter(col("v") === value)

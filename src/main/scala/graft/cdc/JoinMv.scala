@@ -334,7 +334,7 @@ object JoinMv {
     // skipping on the agg fence only would drop an uncommitted MV delta
     // forever (the committed-subset-replays-correctly contract)
     if (committedAggBatch(spark, aggDir) >= batchId &&
-        ChangelogStream.committedVersions(spark, mvDir).lastOption
+        Materialize.committedVersions(spark, mvDir).lastOption
           .exists(_ >= batchId)) {
       // fully-committed batch replayed: just sweep the pending pin
       fs.delete(new org.apache.hadoop.fs.Path(pendingDir(aggDir, batchId)), true)

@@ -235,10 +235,19 @@ object Materialize {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Committed MV versions: `v=<batchId>` dirs carrying the post-rename
+    * `_SUCCESS` marker. No manifest covers MV dirs, and an object-store
+    * rename is not atomic, so the marker is what says a version is whole. */
+  private[graft] def committedVersions(spark: SparkSession, mvDir: String): Seq[Long] = {
+    val f = fs(spark, mvDir)
+    MetaFile.versions(f, new org.apache.hadoop.fs.Path(mvDir))
+      .filter(v => f.exists(new org.apache.hadoop.fs.Path(s"$mvDir/v=$v/_SUCCESS")))
+  }
+
   /** Latest committed MV version = id of the last batch whose delta
     * committed (version dirs are batch-id-named). */
   private def lastMvBatch(spark: SparkSession, mvDir: String): Option[Long] =
-    ChangelogStream.committedVersions(spark, mvDir).lastOption
+    committedVersions(spark, mvDir).lastOption
 
   /** The current MV rows: (group, n, s) of the latest committed version. */
   def readMv(spark: SparkSession, mvDir: String): DataFrame = {
@@ -319,7 +328,7 @@ object Materialize {
     // versions survive (the [[graft.cdc.Buckets.savepoint]] discipline
     // extended to MV version dirs — [[savepointMv]])
     val pins = pinnedMvVersions(spark, mvDir)
-    ChangelogStream.committedVersions(spark, mvDir).filter(_ < batchId)
+    committedVersions(spark, mvDir).filter(_ < batchId)
       .dropRight(1).filterNot(pins.contains)
       .foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$mvDir/v=$v"), true))
 
@@ -338,43 +347,29 @@ object Materialize {
 
   private def pinnedMvVersions(spark: SparkSession, mvDir: String): Set[Long] = {
     val f = fs(spark, mvDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$mvDir/_savepoints")
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
-      .map { st =>
-        val in = f.open(st.getPath)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }.toSet
+    (try f.listStatus(new org.apache.hadoop.fs.Path(s"$mvDir/_savepoints")).toSeq
+     catch { case _: java.io.FileNotFoundException => Seq.empty })
+      .filter(_.getPath.getName.endsWith(".txt"))
+      .flatMap(st => MetaFile.read(f, st.getPath)).map(_.trim.toLong).toSet
   }
+
+  /** The version a named MV savepoint pins. */
+  private def mvPin(spark: SparkSession, mvDir: String, name: String): Long =
+    MetaFile.read(fs(spark, mvDir), mvPinPath(mvDir, name)).map(_.trim.toLong)
+      .getOrElse(throw new IllegalStateException(
+        s"no MV savepoint '$name' at $mvDir"))
 
   /** PIN the MV's latest committed version under `name` — retention keeps
     * it alive however many deltas follow; idempotent re-pin (replay). */
   def savepointMv(spark: SparkSession, mvDir: String, name: String): Unit = {
     val v = lastMvBatch(spark, mvDir).getOrElse(
       throw new IllegalStateException(s"no MV version to savepoint at $mvDir"))
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    val tmp = new org.apache.hadoop.fs.Path(s"$mvDir/_savepoints/.$name.tmp")
-    f.mkdirs(p.getParent)
-    val out = f.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"mv savepoint commit failed: $name")
+    MetaFile.write(fs(spark, mvDir), mvPinPath(mvDir, name), s"$v\n")
   }
 
   /** The MV rows AS OF a savepoint — the pinned version's dir. */
-  def readMvAt(spark: SparkSession, mvDir: String, name: String): DataFrame = {
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    if (!f.exists(p))
-      throw new IllegalStateException(s"no MV savepoint '$name' at $mvDir")
-    val in = f.open(p)
-    val v = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-            finally in.close()
-    spark.read.parquet(s"$mvDir/v=$v")
-  }
+  def readMvAt(spark: SparkSession, mvDir: String, name: String): DataFrame =
+    spark.read.parquet(s"$mvDir/v=${mvPin(spark, mvDir, name)}")
 
   /** RESTORE an MV savepoint AS the live view (the [[graft.cdc.Buckets
     * .restore]] twin for version-per-batch MV dirs): every committed
@@ -390,29 +385,20 @@ object Materialize {
     * release that pin first (deleting its version out from under it would
     * silently corrupt a held snapshot). */
   def restoreMv(spark: SparkSession, mvDir: String, name: String): Unit = {
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    if (!f.exists(p))
-      throw new IllegalStateException(s"no MV savepoint '$name' at $mvDir")
-    val in = f.open(p)
-    val v = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-            finally in.close()
-    val later = ChangelogStream.committedVersions(spark, mvDir).filter(_ > v)
+    val v = mvPin(spark, mvDir, name)
     val blocked = pinnedMvVersions(spark, mvDir).filter(_ > v)
     if (blocked.nonEmpty) throw new IllegalStateException(
       s"cannot restore '$name' (v=$v) at $mvDir: versions ${blocked.toSeq.sorted
         .mkString(",")} are pinned by other savepoints — release them first")
-    later.foreach(lv =>
+    val f = fs(spark, mvDir)
+    committedVersions(spark, mvDir).filter(_ > v).foreach(lv =>
       f.delete(new org.apache.hadoop.fs.Path(s"$mvDir/v=$lv"), true))
   }
 
   /** RELEASE an MV savepoint — the pinned version becomes collectible at
     * the next delta's retention sweep; missing pin is a no-op (replay). */
-  def releaseMvSavepoint(spark: SparkSession, mvDir: String, name: String): Unit = {
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    if (f.exists(p)) f.delete(p, false)
-  }
+  def releaseMvSavepoint(spark: SparkSession, mvDir: String, name: String): Unit =
+    fs(spark, mvDir).delete(mvPinPath(mvDir, name), false)
 
   /** Merge one micro-batch into the keyed state AND its per-group MV — the
     * delta rides the ONE merge the state sink already computes. */

@@ -28,9 +28,10 @@ import org.apache.spark.sql.streaming.Trigger
   * `touched_buckets × bucket_size`, not to total state — the property that
   * keeps a 100 TB keyed state serviceable by small batches (at that scale
   * `numBuckets` grows to thousands; the mechanism is unchanged). Each
-  * bucket version is `_SUCCESS`-fenced and written fresh (never
-  * overwriting what it reads); replaying a batch after a crash mid-rename
-  * is idempotent because the per-key `max_by(seq)` merge is.
+  * bucket version is written fresh (never overwriting what it reads) and
+  * stays invisible until ONE layout-manifest flip ([[Buckets]]) names it;
+  * replaying a batch after a crash before the flip is idempotent because
+  * the per-key `max_by(seq)` merge is.
   */
 object ChangelogStream {
 
@@ -43,28 +44,9 @@ object ChangelogStream {
     * degrading point reads and merge granularity as state grows. */
   val NumBuckets = 16
 
-  /** Committed (`_SUCCESS`-marked) version directories under `stateDir`,
-    * via the Hadoop FileSystem API so the versioned-state mechanism works on
-    * HDFS/S3A paths, not just the local filesystem. */
-  private[graft] def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .sorted
-  }
-
-  /** Only a snapshot whose write job committed (Spark's _SUCCESS marker)
-    * counts — a crash mid-write must leave the previous version as latest,
-    * not a partial directory that would poison every restart. */
-  private def latestVersion(spark: SparkSession, stateDir: String): Option[Long] =
-    committedVersions(spark, stateDir).lastOption
-
-  private[cdc] def bucketOf(keyCols: Seq[String]) =
-    pmod(hash(keyCols.map(col): _*), lit(NumBuckets))
+  private def fsOf(spark: SparkSession, dir: String) =
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ── TRUNCATE fence ────────────────────────────────────────────────────
   // A TRUNCATE at seq T erases every event of its table with seq <= T.
@@ -74,75 +56,40 @@ object ChangelogStream {
   // dropped whenever their bucket is next merged-or-compacted anyway. This
   // is the only rendering that stays O(batch) at 100 TB.
 
+  private def truncateDir(stateDir: String) =
+    new org.apache.hadoop.fs.Path(s"$stateDir/_truncate")
+
   /** Per-table TRUNCATE fences of a state: table → last truncate seq.
     * The empty-string table key fences states whose rows carry no `table`
     * column (single-table streams). */
-  private[cdc] def truncateFences(spark: SparkSession, stateDir: String): Map[String, Long] = {
-    val dir = s"$stateDir/_truncate"
-    committedVersions(spark, dir).lastOption.map { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/v=$v/fence.txt")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  private[cdc] def truncateFences(spark: SparkSession, stateDir: String): Map[String, Long] =
+    MetaFile.latest(fsOf(spark, stateDir), truncateDir(stateDir)).map { txt =>
       txt.split('\n').filter(_.nonEmpty).map { line =>
         val i = line.lastIndexOf('\t')
         line.take(i) -> line.drop(i + 1).toLong
       }.toMap
     }.getOrElse(Map.empty)
-  }
 
   /** Fold new truncate maxima into the fence and commit the next version
     * (idempotent: replaying a batch re-derives the same fence and skips
-    * the write). Same `_SUCCESS`-fenced version protocol as the buckets. */
+    * the write). */
   private def commitTruncateFence(spark: SparkSession, stateDir: String,
                                   updates: Map[String, Long]): Unit = {
     val cur = truncateFences(spark, stateDir)
-    val merged = (cur.keySet ++ updates.keySet).map { t =>
+    setTruncateFences(spark, stateDir, (cur.keySet ++ updates.keySet).map { t =>
       t -> math.max(cur.getOrElse(t, Long.MinValue), updates.getOrElse(t, Long.MinValue))
-    }.toMap
-    if (merged == cur) return
-    val dir = s"$stateDir/_truncate"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (fs.exists(vDir)) fs.delete(vDir, true) // uncommitted crash leftover
-    fs.mkdirs(vDir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(vDir, "fence.txt"))
-    out.write(merged.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    fs.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
+    }.toMap)
   }
 
-  /** SET the fence table wholesale — the RESTORE path ([[Buckets.restore]]):
-    * unlike [[commitTruncateFence]]'s monotone fold, a rollback must
-    * REGRESS fences to the pinned moment. Same `_SUCCESS`-fenced version
-    * protocol; a no-op when the live fences already match (the idempotent
-    * re-restore). */
+  /** SET the fence table wholesale — also the RESTORE path
+    * ([[Buckets.restore]]): unlike [[commitTruncateFence]]'s monotone fold,
+    * a rollback must REGRESS fences to the pinned moment. A no-op when the
+    * live fences already match (the idempotent replay / re-restore). */
   private[cdc] def setTruncateFences(spark: SparkSession, stateDir: String,
-                                     fences: Map[String, Long]): Unit = {
-    val cur = truncateFences(spark, stateDir)
-    if (cur == fences) return
-    val dir = s"$stateDir/_truncate"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (fs.exists(vDir)) fs.delete(vDir, true)
-    fs.mkdirs(vDir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(vDir, "fence.txt"))
-    out.write(fences.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    fs.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
-  }
+                                     fences: Map[String, Long]): Unit =
+    if (truncateFences(spark, stateDir) != fences)
+      MetaFile.commitNext(fsOf(spark, stateDir), truncateDir(stateDir),
+        fences.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }.mkString("\n"))
 
   /** The reader-side fence predicate: a row survives if its seq is past its
     * table's fence (per-table when the state carries `table`, else the
@@ -192,17 +139,6 @@ object ChangelogStream {
     try body finally { hookTruncate.set(pt); hookPrevEmpty.set(pe) }
   }
 
-  /** The bucket a concrete key tuple hashes to — evaluated driver-side by
-    * folding the same Murmur3(seed 42) expression `bucketOf` plans, so a
-    * point read never launches a Spark job just to locate its bucket.
-    * Values must carry the key columns' exact runtime types (Long vs Int
-    * changes the hash). */
-  def bucketOfValues(values: Seq[Any]): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
-    Pmod(new Murmur3Hash(values.map(Literal(_))), Literal(NumBuckets))
-      .eval(null).asInstanceOf[Int]
-  }
-
   /** Merge one micro-batch into the keyed state (exactly the reference's
     * consumer dispatch `utils.go:103-113`, as one set-oriented merge).
     * Tombstones (op=DELETE) are kept in state; readers filter them.
@@ -211,8 +147,8 @@ object ChangelogStream {
     * rewritten — ONE Spark job regardless of how many buckets a batch
     * touches (union of touched snapshots + batch → per-key `max_by` → write
     * partitioned by bucket), followed by per-bucket renames into the next
-    * `_SUCCESS`-fenced version. Untouched bucket files are left
-    * byte-for-byte alone (asserted by StreamSpec). */
+    * version dirs and ONE manifest flip that makes them visible. Untouched
+    * bucket files are left byte-for-byte alone (asserted by StreamSpec). */
   /** `beforeCommit(prev, merged)` — if supplied — runs after the merged
     * bucket contents are written but BEFORE any bucket version becomes
     * visible: `prev` is the touched buckets' previous rows (unrestricted),
@@ -272,29 +208,26 @@ object ChangelogStream {
                   fullMerge: Boolean = false,
                   noTruncate: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, stateDir)
     val bCols = Option(bucketCols).getOrElse(keyCols)
     require(bCols.forall(keyCols.contains),
       s"bucketCols $bCols must be a subset of keyCols $keyCols")
-    // adopt the stored manifest; a pre-manifest state synthesizes its
-    // uniform layout from the committed dirs (one-time listing), a fresh
-    // state starts at the initial uniform layout. The adopted layout is
-    // committed IMMEDIATELY — before any bucket data is written — so the
-    // manifest is the single source of the bucket count from batch 0: the
-    // first batch writes its v=0 bucket dirs (with _SUCCESS) before its
-    // end-of-batch manifest flip, and a crash in that gap would otherwise
-    // replay through legacyLayout's "existing dirs were written at the
-    // historical NumBuckets" assumption — false for a knob-sized fresh
-    // state (initialBuckets != NumBuckets), whose keys would rehash at
-    // the wrong depth and miss/duplicate across buckets (ADVICE r10 #1)
+    // a fresh state commits its initial uniform layout IMMEDIATELY, before
+    // any bucket data is written: "manifest present" is what marks a state
+    // as existing (derived-state readers test exactly that), and the
+    // manifest is the single source of the bucket count from batch 0 — a
+    // crash between the first bucket write and the end-of-batch flip
+    // replays at the recorded initialBuckets, not a re-derived default
     val layout = Buckets.read(spark, stateDir).getOrElse {
-      val l = legacyLayout(spark, stateDir, bCols, initialBuckets)
+      val l = Buckets.initial(bCols, initialBuckets)
       Buckets.commit(spark, stateDir, l)
       l
     }
     require(layout.bucketCols == bCols,
       s"state at $stateDir is bucketed by ${layout.bucketCols}, not $bCols")
+    Seq("__bucket", "__slice").foreach(c => require(!batch.columns.contains(c),
+      s"batch column '$c' at $stateDir collides with the merge's reserved " +
+        "column of that name — rename it before the upsert"))
     val hasOp = batch.columns.contains("op")
     val withB = batch.withColumn("__bucket", Buckets.bucketExpr(layout, bCols))
     // `cacheBatch = false` skips pinning the batch: right when the source
@@ -457,9 +390,14 @@ object ChangelogStream {
           // prev side is latest-per-key already and never combined.
           val sliceTarget = spark.conf.get(
             "spark.graft.merge.slice.bytes", (256L << 20).toString).toLong
+          // a plan without statistics (an RDD-backed or un-materialized
+          // batch) reports spark.sql.defaultSizeInBytes — a sentinel, not a
+          // size: it counts as unknown (0), leaving prev bytes to size the
+          // slices, and the sum below runs in BigInt so nothing can wrap
           val batchEst = scala.util.Try(
-            withB.queryExecution.optimizedPlan.stats.sizeInBytes)
-            .map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
+            withB.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
+            .filter(_ < BigInt(spark.sessionState.conf.defaultSizeInBytes))
+            .getOrElse(BigInt(0))
           val perBucketBatch = batchEst / math.max(1, touched.size)
           val slices: Map[Int, Int] = touched.map { b =>
             val v = layout.version(b)
@@ -468,8 +406,8 @@ object ChangelogStream {
               else scala.util.Try(fs.getContentSummary(
                 new org.apache.hadoop.fs.Path(
                   s"$stateDir/bucket=$b/v=$v")).getLength).getOrElse(0L)
-            val want = (prevBytes + perBucketBatch + sliceTarget - 1) / sliceTarget
-            b -> math.max(1L, math.min(4096L, want)).toInt
+            val want = (BigInt(prevBytes) + perBucketBatch + sliceTarget - 1) / sliceTarget
+            b -> want.max(1).min(4096).toInt
           }.toMap
           val nParts = slices.values.sum
           // only SKEWED buckets (slices > 1) ride the literal lookup map:
@@ -593,12 +531,11 @@ object ChangelogStream {
           hookPrev.unpersist(); prevCached.unpersist(); merged.unpersist()
         }
       }
-      // write each touched bucket's NEXT version dir. The per-dir _SUCCESS
-      // still marks a complete write, but visibility is now the manifest
-      // flip below: a crash anywhere before it leaves every reader on the
-      // previous consistent (bucket → version) set — no torn multi-bucket
-      // reads — and the batch replay (checkpointed offsets) re-merges
-      // idempotently onto the same version numbers
+      // promote each touched bucket's NEXT version dir. Visibility is the
+      // manifest flip below: a crash anywhere before it leaves every reader
+      // on the previous consistent (bucket → version) set — no torn
+      // multi-bucket reads — and the batch replay (checkpointed offsets)
+      // re-merges idempotently onto the same version numbers
       var entries = layout.entries
       Materialize.timed("promote", stateDir)(touched.foreach { b =>
         val from = new org.apache.hadoop.fs.Path(tmp, s"__bucket=$b")
@@ -618,7 +555,6 @@ object ChangelogStream {
         if (fs.exists(to)) fs.delete(to, true)
         if (!fs.rename(from, to))
           throw new IllegalStateException(s"state promote failed: $from -> $to")
-        fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
         entries = entries.updated(b, (layout.depth(b), next))
         }
       })
@@ -662,14 +598,7 @@ object ChangelogStream {
         // retention: keep each bucket's versions from the PREVIOUS manifest's
         // pointer up (readers that resolved that manifest must still find
         // their dirs), plus anything a savepoint pins
-        val pinned = Buckets.pinnedVersions(spark, stateDir)
-        touched.foreach { b =>
-          val keepFrom = math.max(layout.version(b), 0L)
-          val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-          committedVersions(spark, bDir.toString)
-            .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-            .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-        }
+        sweepBelow(spark, stateDir, layout, touched)
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
         // sweep stale merge-tmp siblings (crashed/interrupted attempts'
         // unique dirs): by now any zombie writer's batch is long unwound,
@@ -712,8 +641,7 @@ object ChangelogStream {
     require(targetBuckets <= layout.entries.size,
       s"shrink to $targetBuckets: the layout has only ${layout.entries.size} " +
         "buckets — shrink reduces, the split path grows")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, stateDir)
     val paths = layout.paths(stateDir)
     val d = Integer.numberOfTrailingZeros(targetBuckets)
     val target = Buckets.initial(layout.bucketCols, targetBuckets)
@@ -745,7 +673,6 @@ object ChangelogStream {
         spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw.schema)
           .coalesce(1).write.mode(SaveMode.Overwrite).parquet(to.toString)
-      fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
       entries = entries.updated(b, (d, vNew))
     }
     Buckets.commit(spark, stateDir, target.copy(entries = entries))
@@ -759,16 +686,7 @@ object ChangelogStream {
     // too and the whole dir ages out through sweepOrphanBuckets on the
     // next compact/shrink. Savepoint pins survive as always (a pinned
     // manifest copy still names its (bucket, version) paths).
-    val pinned = Buckets.pinnedVersions(spark, stateDir)
-    layout.entries.toSeq.sortBy(_._1).foreach { case (b, (_, _)) =>
-      val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-      if (fs.exists(bDir)) {
-        val keepFrom = math.max(layout.version(b), 0L)
-        committedVersions(spark, bDir.toString)
-          .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-      }
-    }
+    sweepBelow(spark, stateDir, layout, layout.entries.keys.toSeq.sorted)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
@@ -780,16 +698,14 @@ object ChangelogStream {
     * manifest's own layout copy keeps resolving them). */
   private def sweepOrphanBuckets(spark: SparkSession, stateDir: String,
                                  layout: Buckets.Layout): Unit = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
+    val fs = fsOf(spark, stateDir)
     val pinned = Buckets.pinnedVersions(spark, stateDir)
-    fs.listStatus(root).toSeq
+    fs.listStatus(new org.apache.hadoop.fs.Path(stateDir)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .map(s => (s.getPath, s.getPath.getName.stripPrefix("bucket=").toInt))
       .filter(_._2 >= layout.entries.size)
       .foreach { case (bDir, b) =>
-        committedVersions(spark, bDir.toString)
+        MetaFile.versions(fs, bDir)
           .filterNot(pinned.getOrElse(b, Set.empty).contains)
           .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
         if (fs.listStatus(bDir).forall(!_.getPath.getName.startsWith("v=")))
@@ -822,8 +738,7 @@ object ChangelogStream {
     val layout = Buckets.read(spark, stateDir).getOrElse(
       throw new IllegalStateException(
         s"no manifest at $stateDir — compact a state written by upsertBatch"))
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, stateDir)
     val paths = layout.paths(stateDir)
     if (paths.isEmpty) return
     val fences = truncateFences(spark, stateDir)
@@ -856,56 +771,38 @@ object ChangelogStream {
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw.schema)
             .coalesce(1).write.mode(SaveMode.Overwrite).parquet(to.toString)
         }
-        fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
         entries = entries.updated(b, (d, v + 1))
       }
     }
     Buckets.commit(spark, stateDir, layout.copy(entries = entries))
-    val pinned = Buckets.pinnedVersions(spark, stateDir)
-    entries.toSeq.sortBy(_._1).foreach { case (b, (_, _)) =>
-      val keepFrom = math.max(layout.version(b), 0L)
-      val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-      if (fs.exists(bDir))
-        committedVersions(spark, bDir.toString)
-          .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-    }
+    sweepBelow(spark, stateDir, layout, layout.entries.keys.toSeq.sorted)
     // ...and age out any bucket ids a previous shrink orphaned (kept one
     // cycle for pre-shrink-manifest readers — see shrinkState's sweep)
     sweepOrphanBuckets(spark, stateDir, layout)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
-  /** The uniform layout of a state written before manifests existed (or of
-    * a fresh state): NumBuckets buckets at depth log2(NumBuckets), pointing
-    * at their latest `_SUCCESS`-committed versions. */
-  private def legacyLayout(spark: SparkSession, stateDir: String,
-                           bCols: Seq[String],
-                           initialBuckets: Int = NumBuckets): Buckets.Layout = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // "fresh" means NO bucket data yet — root existence is not the test:
-    // the DSv2 sink stages its first epoch under $stateDir/_staging/
-    // BEFORE the first merge, which would otherwise misread every
-    // sink-created state as pre-manifest and silently drop the caller's
-    // initialBuckets sizing
-    val hasBucketDirs = fs.exists(root) && fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    if (!hasBucketDirs) Buckets.initial(bCols, initialBuckets)
-    else {
-      // an EXISTING pre-manifest state was necessarily written at the
-      // historical NumBuckets — initialBuckets only sizes fresh states
-      val init = Buckets.initial(bCols)
-      init.copy(entries = init.entries.map { case (b, (d, _)) =>
-        b -> (d, latestVersion(spark, s"$stateDir/bucket=$b").getOrElse(-1L))
-      })
+  /** Retention: delete the given buckets' versions below their pointers in
+    * `prior` — the manifest just superseded, whose readers (a lazy plan
+    * resolved before the flip) must still find their dirs — except
+    * versions a savepoint pins. Version dirs list plainly: the manifest,
+    * not a marker, decides which of them is committed. */
+  private def sweepBelow(spark: SparkSession, stateDir: String,
+                         prior: Buckets.Layout, buckets: Seq[Int]): Unit = {
+    val fs = fsOf(spark, stateDir)
+    val pinned = Buckets.pinnedVersions(spark, stateDir)
+    buckets.foreach { b =>
+      val keepFrom = math.max(prior.version(b), 0L)
+      val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
+      MetaFile.versions(fs, bDir)
+        .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
+        .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
     }
   }
 
   /** Read the materialized table: the manifest's pointed snapshot set minus
-    * tombstones (legacy states without a manifest fall back to per-bucket
-    * latest-`_SUCCESS` resolution). `onlyBucket` restricts the read to a
-    * single bucket — the bucket-pruned path value/key point reads use. */
+    * tombstones. `onlyBucket` restricts the read to a single bucket — the
+    * bucket-pruned path value/key point reads use. */
   def readState(spark: SparkSession, stateDir: String, payloadCols: Seq[String],
                 onlyBucket: Option[Int] = None): DataFrame =
     readResolved(spark, stateDir,
@@ -918,10 +815,8 @@ object ChangelogStream {
     * ~100 ms of driver work per bucket × two states × every micro-batch). */
   def readStateBuckets(spark: SparkSession, stateDir: String,
                        payloadCols: Seq[String], buckets: Seq[Int]): DataFrame = {
-    val paths = Buckets.read(spark, stateDir) match {
-      case Some(layout) => bucketPaths(layout, stateDir, buckets)
-      case None => buckets.flatMap(b => resolvePaths(spark, stateDir, Some(b)))
-    }
+    val paths = Buckets.read(spark, stateDir)
+      .map(bucketPaths(_, stateDir, buckets)).getOrElse(Seq.empty)
     readResolved(spark, stateDir, paths, buckets.headOption, payloadCols)
   }
 
@@ -973,22 +868,12 @@ object ChangelogStream {
       Some(fences))
   }
 
-  /** The committed data paths of a state: manifest pointers when present,
-    * legacy latest-`_SUCCESS` listing otherwise. */
+  /** The committed data paths of a state: its manifest's pointers (none
+    * when no state exists). */
   private def resolvePaths(spark: SparkSession, stateDir: String,
                            onlyBucket: Option[Int]): Seq[String] =
-    Buckets.read(spark, stateDir) match {
-      case Some(layout) => layout.paths(stateDir, onlyBucket)
-      case None =>
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(root)) Seq.empty
-        else fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .filter(s => onlyBucket.forall(b => s.getPath.getName == s"bucket=$b"))
-          .flatMap(b => latestVersion(spark, b.getPath.toString)
-            .map(v => s"${b.getPath}/v=$v"))
-    }
+    Buckets.read(spark, stateDir).map(_.paths(stateDir, onlyBucket))
+      .getOrElse(Seq.empty)
 
   private def readResolved(spark: SparkSession, stateDir: String,
                            latest: Seq[String], onlyBucket: Option[Int],
@@ -1017,7 +902,7 @@ object ChangelogStream {
   /** Point lookup: the current row for ONE key — the reference's per-id ES
     * match query (`es.go:50-54`), served from the bucketed snapshot without
     * touching the rest of the state. The key tuple hashes (driver-side, no
-    * job) to its bucket — the same `bucketOf` the writer used — so the
+    * job) to its bucket — the same hash the writer's layout used — so the
     * read opens exactly one bucket's latest committed version —
     * O(bucket_size), not O(state) — and the in-bucket filter is a pushed
     * parquet predicate. This is the "layout IS the index" completion: at
@@ -1037,18 +922,13 @@ object ChangelogStream {
               key: Seq[(String, Any)]): Option[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.Row
     val byName = key.toMap
-    val latest = Buckets.read(spark, stateDir) match {
-      case Some(layout) =>
-        val vals = layout.bucketCols.map(c => byName.getOrElse(c,
-          throw new IllegalArgumentException(
-            s"key ${key.map(_._1)} lacks the layout's bucket column '$c'")))
-        val b = Buckets.bucketOfValues(layout, vals)
-        if (layout.version(b) >= 0) Some(s"$stateDir/bucket=$b/v=${layout.version(b)}")
-        else None
-      case None => // pre-manifest state: uniform full-key hash
-        val b = bucketOfValues(key.map(_._2))
-        latestVersion(spark, s"$stateDir/bucket=$b")
-          .map(v => s"$stateDir/bucket=$b/v=$v")
+    val latest = Buckets.read(spark, stateDir).flatMap { layout =>
+      val vals = layout.bucketCols.map(c => byName.getOrElse(c,
+        throw new IllegalArgumentException(
+          s"key ${key.map(_._1)} lacks the layout's bucket column '$c'")))
+      val b = Buckets.bucketOfValues(layout, vals)
+      if (layout.version(b) >= 0) Some(s"$stateDir/bucket=$b/v=${layout.version(b)}")
+      else None
     }
     latest.flatMap { dir =>
       val df = spark.read.parquet(dir)
@@ -1271,8 +1151,7 @@ object ChangelogStream {
 
   private def assertDiffPassCaughtUp(spark: SparkSession,
                                      stateDir: String): Unit = {
-    val manifestV = committedVersions(spark, s"$stateDir/_layout")
-      .lastOption.getOrElse(-1L)
+    val manifestV = Buckets.manifestVersion(spark, stateDir)
     // boxed compare: an absent entry is null, never a false version match
     if (java.lang.Long.valueOf(manifestV) == diffPassVerified.get(stateDir)) return
     val liveMax = readState(spark, stateDir, Seq("seq"))

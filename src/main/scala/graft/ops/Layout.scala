@@ -158,7 +158,7 @@ object Layout {
     * untouched and the partition values stay encoded in the paths, never
     * inlined into files. Each leaf inherits [[compact]]'s two-rename crash
     * protocol, and a leaf that crashed mid-swap in a PREVIOUS run (visible
-    * only as `leaf.compact-old`) is rolled back during the walk, so no
+    * only as `.leaf.compact-old`) is rolled back during the walk, so no
     * crash point loses a partition. A non-partitioned root degenerates to
     * a single [[compact]].
     *
@@ -170,17 +170,13 @@ object Layout {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      // a crashed swap leaves data only under .<leaf>.compact-old (hidden
-      // naming) or <leaf>.compact-old (legacy, pre-hidden naming) with no
-      // live <leaf> dir — recover BOTH before scanning for partitions, so a
-      // legacy leftover like `event_type=a.compact-old` is migrated instead
-      // of being matched as a data partition below
-      fs.listStatus(p)
-        .filter(s => s.getPath.getName.endsWith(".compact-old") ||
-          s.getPath.getName.endsWith(".compact-tmp"))
-        .foreach { s =>
-          val live = s.getPath.getName.stripPrefix(".")
-            .stripSuffix(".compact-old").stripSuffix(".compact-tmp")
+      // a crashed swap leaves data only under the hidden .<leaf>.compact-old
+      // with no live <leaf> dir — recover it before scanning for
+      // partitions, which skip hidden names
+      fs.listStatus(p).map(_.getPath.getName)
+        .filter(n => n.startsWith(".") && n.endsWith(".compact-old"))
+        .foreach { n =>
+          val live = n.stripPrefix(".").stripSuffix(".compact-old")
           recoverCompact(spark, new org.apache.hadoop.fs.Path(p, live).toString)
         }
       val parts = fs.listStatus(p).toSeq.filter(s => s.isDirectory &&
@@ -193,25 +189,11 @@ object Layout {
 
   /** Roll back a compact that crashed between its two renames (data only
     * under the hidden `.<name>.compact-old` sibling, nothing at `dir`).
-    * Idempotent; call before compacting or at reader startup.
-    *
-    * Also migrates the LEGACY pre-hidden scratch name (`<name>.compact-old`,
-    * no dot prefix — what compacts before the naming change left behind): a
-    * crash leftover in that form is either rolled back (no live dir) or
-    * deleted (live dir exists, so the swap completed and the leftover is the
-    * pre-compact copy) — without this, a legacy leftover under a partitioned
-    * root would match partition discovery and be read as data. */
+    * Idempotent; call before compacting or at reader startup. */
   def recoverCompact(spark: SparkSession, dir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = scratch(dir, ".compact-old")
     if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
-    val legacyOld = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    if (fs.exists(legacyOld)) {
-      if (!fs.exists(path)) fs.rename(legacyOld, path)
-      else fs.delete(legacyOld, true)
-    }
-    val legacyTmp = new org.apache.hadoop.fs.Path(dir + ".compact-tmp")
-    if (fs.exists(legacyTmp)) fs.delete(legacyTmp, true)
   }
 }

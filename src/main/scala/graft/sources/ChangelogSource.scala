@@ -171,26 +171,30 @@ case class ChangelogInputPartition(file: String, start: Long, length: Long,
 /** File listing + range planning shared by the batch scan and the
   * micro-batch stream. */
 object ChangelogPlanner {
-  /** Recursive listing of data files under `dir`: skips any file whose name
-    * or whose sub-directory component (relative to `dir`) starts with `_`
-    * or `.` (Spark/Hadoop metadata: `_SUCCESS`, `.staging`, …). Files with
-    * mtime < `minMtime` are dropped during the walk — the streaming side's
-    * incremental-listing floor (nothing that old can be new). */
+  /** Recursive listing of data files under `dir`. Every entry whose name
+    * starts with `_` or `.` (Spark/Hadoop metadata: `_SUCCESS`, `_staging/`,
+    * a producer's `.x.tmp`, …) is pruned by name BEFORE it is stat'ed or
+    * descended into, and a sub-directory that vanishes between its parent's
+    * listing and its own is skipped — a producer's rename racing the
+    * listing must not fail the query. Files with mtime < `minMtime` are
+    * dropped during the walk — the streaming side's incremental-listing
+    * floor (nothing that old can be new). */
   def listDataFiles(dir: String, confMap: Map[String, String],
                     minMtime: Long = Long.MinValue): Seq[org.apache.hadoop.fs.FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(ChangelogConf.toConfiguration(confMap))
-    val rootUri = fs.makeQualified(root).toUri
     val out = ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getModificationTime >= minMtime) {
-        val rel = rootUri.relativize(s.getPath.toUri).getPath
-        val hidden = rel.split('/').exists(c => c.startsWith("_") || c.startsWith("."))
-        if (!hidden) out += s
+    def walk(entries: Array[org.apache.hadoop.fs.FileStatus]): Unit =
+      entries.foreach { s =>
+        val name = s.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) {
+          if (s.isDirectory)
+            walk(try fs.listStatus(s.getPath)
+                 catch { case _: java.io.FileNotFoundException => Array.empty })
+          else if (s.getModificationTime >= minMtime) out += s
+        }
       }
-    }
+    walk(fs.listStatus(root))
     out.sortBy(_.getPath.toString).toSeq
   }
 

@@ -29,7 +29,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - the driver `commit(epochId, messages)` reads exactly the staged files
   *    the messages name and runs [[graft.cdc.ChangelogStream.upsertBatch]] —
   *    the bucketed incremental keyed merge (touched-buckets-only rewrite,
-  *    `_SUCCESS`-fenced versions) the foreachBatch sink uses, unchanged.
+  *    made visible by one layout-manifest flip) the foreachBatch sink
+  *    uses, unchanged.
   *
   * Exactly-once: commits are EPOCH-FENCED. A committed epoch records itself
   * in `state/_epochs/<queryId>/latest` (temp-file + rename; epochs commit in

@@ -105,7 +105,7 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
     Materialize.commitDeltaRows(spark, mvd, 3L, rows("B", 1L, 1.0), Seq("g"))
     // retention keeps: v3 (latest), v2 (one predecessor), v0 (PINNED);
     // v1 collected
-    assert(ChangelogStream.committedVersions(spark, mvd) === Seq(0L, 2L, 3L))
+    assert(Materialize.committedVersions(spark, mvd) === Seq(0L, 2L, 3L))
     val pinned = Materialize.readMvAt(spark, mvd, "pin")
       .select(col("g"), col("n"), col("s").cast("double").as("s"))
       .as[(String, Long, Double)].collect().toSeq
@@ -113,7 +113,7 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
     // release: the next delta's sweep collects the formerly-pinned version
     Materialize.releaseMvSavepoint(spark, mvd, "pin")
     Materialize.commitDeltaRows(spark, mvd, 4L, rows("B", 1L, 1.0), Seq("g"))
-    assert(ChangelogStream.committedVersions(spark, mvd) === Seq(3L, 4L))
+    assert(Materialize.committedVersions(spark, mvd) === Seq(3L, 4L))
     // re-release of a missing pin is a no-op (replay contract)
     Materialize.releaseMvSavepoint(spark, mvd, "pin")
   }

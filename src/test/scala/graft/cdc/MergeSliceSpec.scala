@@ -81,6 +81,72 @@ class MergeSliceSpec extends AnyFunSuite with SparkSpec {
       .exists(_.getAs[String]("v").startsWith("b000007")))
   }
 
+  /** An RDD-backed copy of `df`: its plan carries no statistics, so the
+    * optimizer reports spark.sql.defaultSizeInBytes — the "unknown size"
+    * sentinel the slice sizer must not read as a byte count. */
+  private def statsLess(df: org.apache.spark.sql.DataFrame) = {
+    val out = spark.createDataFrame(df.rdd, df.schema)
+    assert(out.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    out
+  }
+
+  private def withSliceTarget[T](bytes: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.merge.slice.bytes", bytes.toString)
+    try body finally spark.conf.unset("spark.graft.merge.slice.bytes")
+  }
+
+  test("a stats-less batch touching ONE bucket takes its slice count from " +
+    "the bucket's prev bytes") {
+    val stateDir = Files.createTempDirectory("graft-slice3-").toString + "/state"
+    ChangelogStream.upsertBatch(spark.range(512)
+      .select(($"id" + 1).as("id"), ($"id" + 1).as("seq"), lit("INSERT").as("op"),
+        concat(lit("a"), lpad(($"id" + 1).cast("string"), 6, "0"),
+          lit("-" * 64)).as("v")), stateDir, initialBuckets = 4)
+    val layout = Buckets.read(spark, stateDir).get
+    val b = Buckets.bucketOfValues(layout, Seq(7L))
+    val prevDir = new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b/v=${layout.version(b)}")
+    val prevBytes = prevDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(prevDir).getLength
+    // a target of a quarter of the bucket: ⌈prev / target⌉ = 4 or 5 slices
+    val target = prevBytes / 4
+    val slices = ((prevBytes + target - 1) / target).toInt
+    withSliceTarget(target)(ChangelogStream.upsertBatch(
+      statsLess(Seq((7L, 100000L, "UPDATE", "b7")).toDF("id", "seq", "op", "v")),
+      stateDir, cacheBatch = false))
+    // the merge exchange hash-partitions (__bucket, __slice) into `slices`
+    // partitions (one touched bucket), and each partition writes one file:
+    // recompute that placement over the bucket's keys
+    val wantFiles = ChangelogStream.readState(spark, stateDir, Seq("id"), Some(b))
+      .select(pmod(hash(lit(b), pmod(xxhash64($"id"), lit(slices.toLong)).cast("int")),
+        lit(slices)).as("part"))
+      .distinct().count()
+    assert(wantFiles > 1)
+    assert(partFiles(latestVersionDir(stateDir, b)).size === wantFiles,
+      s"bucket $b ($prevBytes prev bytes, target $target) should merge in $slices slices")
+    assert(ChangelogStream.readKey(spark, stateDir, 7L)
+      .exists(_.getAs[String]("v") === "b7"))
+  }
+
+  test("a stats-less batch touching SEVERAL small buckets writes one file per " +
+    "bucket") {
+    val stateDir = Files.createTempDirectory("graft-slice4-").toString + "/state"
+    def mk(seqOff: Long, tag: String) = (1L to 32L)
+      .map(i => (i, i + seqOff, "INSERT", s"$tag$i")).toDF("id", "seq", "op", "v")
+    ChangelogStream.upsertBatch(mk(0L, "a"), stateDir, initialBuckets = 2)
+    withSliceTarget(4096L)(ChangelogStream.upsertBatch(
+      statsLess(mk(100L, "b")), stateDir, cacheBatch = false))
+    val layout = Buckets.read(spark, stateDir).get
+    layout.entries.keys.foreach { b =>
+      val files = partFiles(latestVersionDir(stateDir, b))
+      assert(files.size === 1,
+        s"bucket $b: expected 1 file under an unknown batch size, got ${files.size}")
+    }
+    assert(ChangelogStream.readState(spark, stateDir, Seq("id", "v"))
+      .orderBy("id").as[(Long, String)].collect().toSeq ===
+      (1L to 32L).map(i => (i, s"b$i")))
+  }
+
   test("sessionWithParts memoizes per (context, parts) — the codegen cache " +
     "survives across passes instead of re-keying on a throwaway classloader") {
     val a = Materialize.sessionWithParts(spark, 8)

@@ -167,6 +167,23 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     assert(ChangelogStream.truncateFences(spark, stateDir) === Map("" -> 10L))
   }
 
+  // the merge adds __bucket (and, past the seed batch, __slice) to the
+  // batch; a payload column of either name would be silently overwritten
+  Seq("__bucket", "__slice").foreach { c =>
+    test(s"a batch column named $c (reserved by the merge) fails loudly") {
+      val stateDir = Files.createTempDirectory("graft-reserved-").toString + "/state"
+      ChangelogStream.upsertBatch(
+        Seq((1L, 1L, "INSERT", "a")).toDF("id", "seq", "op", "v"), stateDir)
+      val e = intercept[IllegalArgumentException] {
+        ChangelogStream.upsertBatch(Seq((2L, 2L, "INSERT", "b", 7))
+          .toDF("id", "seq", "op", "v", c), stateDir)
+      }
+      assert(e.getMessage.contains(s"'$c'"), e.getMessage)
+      assert(ChangelogStream.readState(spark, stateDir, Seq("id", "v"))
+        .as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+    }
+  }
+
   test("upsertBatch merges across batches with tombstones retained") {
     val work = Files.createTempDirectory("graft-upsert-").toString
     val stateDir = s"$work/state"
@@ -431,12 +448,13 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     val b2 = mk((1L, 3L, "UPDATE", "a2"), (2L, 4L, "INSERT", "b"))
     ChangelogStream.upsertBatch(mk((1L, 1L, "INSERT", "a")), stateDir)
     ChangelogStream.upsertBatch(b2, stateDir)
-    // simulate the crash window: batch 2's bucket version dirs are written
-    // (with their _SUCCESS) but the manifest flip "never happened"
+    // simulate the crash window: batch 2's bucket version dirs are
+    // promoted but the manifest flip "never happened"
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = ChangelogStream.committedVersions(spark, s"$stateDir/_layout")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_layout/v=${manifests.last}"), true)
+    val flipped = Buckets.manifestVersion(spark, stateDir)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_layout/v=$flipped"), false))
+    assert(Buckets.manifestVersion(spark, stateDir) === flipped - 1)
     // readers resolve the PREVIOUS manifest: batch-1 content only, even
     // though batch-2 dirs sit committed on disk (no torn multi-bucket read)
     assert(ChangelogStream.readState(spark, stateDir, Seq("id", "v"))
@@ -487,11 +505,12 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     assert(ChangelogStream.readKey(spark, stateDir, 2L).isEmpty)   // tombstone
     assert(ChangelogStream.readKey(spark, stateDir, 999L).isEmpty) // absent
     // single-bucket proof: delete every OTHER bucket dir — the lookup must
-    // not notice (it never lists or reads them)
+    // not notice (it never lists or reads them). The manifest stays: it is
+    // the state's commit record, read once to locate the bucket
     val b1 = spark.range(1).select(
       pmod(hash(lit(1L)), lit(ChangelogStream.NumBuckets))).head.getInt(0)
     new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory && f.getName != s"bucket=$b1")
+      .filter(f => f.getName.startsWith("bucket=") && f.getName != s"bucket=$b1")
       .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     assert(ChangelogStream.readKey(spark, stateDir, 1L)
       .exists(_.getAs[String]("v") === "v1b"))
@@ -511,6 +530,15 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     val versions = buckets.head.listFiles()
       .filter(_.getName.startsWith("v=")).map(_.getName).sorted
     assert(versions.toSeq === Seq("v=3", "v=4"))
+    // the manifest is the only commit record: its versions are single
+    // files (the initial layout plus one per batch, keep-two retention),
+    // and no bucket version carries a marker of its own
+    val manifests = new java.io.File(stateDir, "_layout").listFiles()
+      .map(_.getName).filter(_.startsWith("v=")).sorted
+    assert(manifests.toSeq === Seq("v=4", "v=5"))
+    assert(new java.io.File(stateDir, "_layout").listFiles().forall(_.isFile))
+    assert(buckets.head.listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).forall(_.getName != "_SUCCESS"))
     val out = ChangelogStream.readState(spark, stateDir, Seq("id", "v"))
       .as[(Long, String)].collect()
     assert(out.toSeq === Seq((7L, "v5"))) // latest seq wins
@@ -521,9 +549,10 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     val stateDir = s"$work/state"
     ChangelogStream.upsertBatch(
       Seq((1L, 1L, "INSERT", "good")).toDF("id", "seq", "op", "v"), stateDir)
-    // simulate a crash AFTER the promote rename but BEFORE the _SUCCESS
-    // fence: the uncommitted v=1 is POPULATED with stale files (a bare
-    // mkdirs would mask the rename-onto-nonempty-dir hazard)
+    // simulate a crash AFTER the promote rename but BEFORE the manifest
+    // flip: the unreferenced v=1 is POPULATED with stale files (a bare
+    // mkdirs would mask the rename-onto-nonempty-dir hazard); nothing but
+    // the manifest tells it apart from a committed version
     val bucket = new java.io.File(stateDir).listFiles()
       .filter(_.getName.startsWith("bucket=")).head
     val partial = new java.io.File(bucket, "v=1")

@@ -162,6 +162,23 @@ class ChangelogSourceSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.format("changelog").load(dir.toString).count() === 5)
   }
 
+  test("listing prunes hidden entries before any stat or descent and skips " +
+    "a directory that vanishes mid-walk") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hidlist-")
+    val sub = java.nio.file.Files.createDirectory(dir.resolve("dt=1"))
+    val staging = java.nio.file.Files.createDirectory(dir.resolve("_staging"))
+    java.nio.file.Files.createDirectory(dir.resolve(HiddenGuardFileSystem.Vanishing))
+    writeEnvelopes(dir, "top.json", 1 to 2)
+    writeEnvelopes(sub, "nested.json", 3 to 5)
+    writeEnvelopes(staging, "in-flight.json", 6 to 9)
+    writeEnvelopes(dir, ".x.tmp", 10 to 11)
+    val conf = Map(
+      "fs.hiddenguard.impl" -> classOf[HiddenGuardFileSystem].getName,
+      "fs.hiddenguard.impl.disable.cache" -> "true")
+    val listed = ChangelogPlanner.listDataFiles(s"hiddenguard://$dir", conf)
+    assert(listed.map(_.getPath.getName) === Seq("nested.json", "top.json"))
+  }
+
   test("gzip envelopes read through the codec factory") {
     val dir = java.nio.file.Files.createTempDirectory("graft-gz-")
     val lines = (1 to 4).map(i =>
@@ -197,4 +214,55 @@ class ChangelogSourceSpec extends AnyFunSuite with SparkSpec {
       .select(Seq(col("id")) ++ Changelog.payloadCols.map(col): _*)
     assert(decoded.exceptAll(orig).count() === 0 && orig.exceptAll(decoded).count() === 0)
   }
+}
+
+/** The local filesystem under its own scheme, failing ANY status or listing
+  * call on a hidden path (a component starting with `_` or `.`): a listing
+  * that stats or descends into a hidden entry throws instead of silently
+  * racing a producer's rename. Listing a visible directory still names its
+  * hidden children, as every filesystem does. The directory named
+  * [[HiddenGuardFileSystem.Vanishing]] lists as already deleted. */
+class HiddenGuardFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  override def getUri: java.net.URI = java.net.URI.create("hiddenguard:///")
+
+  private def guard(p: Path): Unit =
+    if (p.toUri.getPath.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
+      throw new AssertionError(s"status or listing call on hidden path $p")
+
+  override def getFileStatus(p: Path): FileStatus = { guard(p); super.getFileStatus(p) }
+
+  override def getFileLinkStatus(p: Path): FileStatus = {
+    guard(p); super.getFileLinkStatus(p)
+  }
+
+  override def listStatus(p: Path): Array[FileStatus] = {
+    guard(p)
+    if (p.getName == HiddenGuardFileSystem.Vanishing)
+      throw new java.io.FileNotFoundException(s"$p vanished")
+    // plain statuses: the local FS's lazy permission lookup does not
+    // resolve a foreign scheme, and a listing needs none
+    def status(q: Path) = {
+      val s = super.getFileStatus(q)
+      new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, q)
+    }
+    val f = pathToFile(p)
+    if (!f.isDirectory) Array(status(p))
+    else f.list().sorted.map(n => status(new Path(p, n)))
+  }
+
+  override def listLocatedStatus(p: Path)
+      : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+    guard(p); super.listLocatedStatus(p)
+  }
+
+  override def listStatusIterator(p: Path)
+      : org.apache.hadoop.fs.RemoteIterator[FileStatus] = {
+    guard(p); super.listStatusIterator(p)
+  }
+}
+
+object HiddenGuardFileSystem {
+  val Vanishing = "dt=vanishing"
 }
